@@ -1,9 +1,9 @@
 """Benchmark harness (driver contract: one JSON line on stdout).
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``. Each query is forced
-through the noop sink so every column is computed (a bare ``count()`` would
-let Catalyst prune the work away).
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default: the host's
+cores). Each query is forced through the noop sink so every column is
+computed (a bare ``count()`` would let Catalyst prune the work away).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from etl_capnz_spark.session import get_session  # noqa: E402
+from etl_capnz_spark.session import default_cpus, get_session  # noqa: E402
 
 HEADLINE = [
     "cap_features",
@@ -237,9 +237,7 @@ def main() -> None:
             envelopes = json.load(f)
     calib = (envelopes or {}).get("calibration", {})
     ref = calib.get("ref_sec")
-    ref_ok = bool(ref) and calib.get("cpus") == int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
+    ref_ok = bool(ref) and calib.get("cpus") == default_cpus()
 
     # TWO timed passes, per-query MIN: a single JVM stall (one observed
     # full-GC pause put an 8 s spike on one query of an otherwise-idle

@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Most files one file-source micro-batch reads (streaming/stream.py
+# ``read_xml_stream``); local sessions list that many paths on the driver.
+STREAM_MAX_FILES_PER_TRIGGER = 1000
+
+
+def default_cpus() -> int:
+    """Local task threads: ``$SPARK_GRAFT_CPUS``, else the host's cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
 
 def get_session(
     app_name: str = "etl_capnz_spark",
@@ -23,14 +32,14 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local runs; on a
+    ``master`` defaults to ``local[default_cpus()]`` for local runs; on a
     real cluster the caller passes nothing and spark-submit supplies the
     master. ``shuffle_partitions`` defaults to the local core count — AQE
     coalesces downward at runtime, so oversizing is cheap and undersizing
     (the default 200 on a tiny box, or 200 on a 1000-executor cluster) is
     the real hazard.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -62,7 +71,22 @@ def get_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # JVM case mappings instead of ICU for upper/lower: the first ICU
+        # call builds a title-case table over every code point (~2 s of
+        # CPU, other task threads blocked on the class-init lock) on every
+        # cold run. Results match on the cases pinned in
+        # tests/test_session_defaults.py.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
+    if master.startswith("local"):
+        # A file-source micro-batch re-lists its new files as explicit
+        # paths, and past this many paths InMemoryFileIndex lists them in
+        # a Spark job (~0.4 s per batch of ~40 files at local[4]) — on the
+        # very cores the driver would list them with.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(STREAM_MAX_FILES_PER_TRIGGER),
+        )
     # Creation-time-only confs (e.g. spark.scheduler.mode=FAIR for
     # multi-tenant benches) — no effect if a session already exists.
     for k, v in (extra_confs or {}).items():
@@ -141,42 +165,32 @@ def flat_local_checkpoint(df, eager: bool = True):
     callers that want this disable AQE around their loop
     (connected_components).
 
-    Falls back to the plain checkpoint if the internal constructor is
-    unavailable (the behavior every round before this helper).
+    No fallback: if the internal constructor is unavailable (a Spark
+    upgrade) this raises rather than silently returning a checkpoint that
+    inherits the origin statistics.
     """
-    ck = _truncate_lineage(df, eager)
-    try:
-        from pyspark.sql import DataFrame as _PyDF
+    from pyspark.sql import DataFrame as _PyDF
 
-        jvm = ck.sparkSession._jvm
-        an = ck._jdf.queryExecution().analyzed()
-        if (
-            an.getClass().getName()
-            == "org.apache.spark.sql.execution.LogicalRDD"
-        ):
-            none = jvm.scala.Option.apply(None)
-            new_plan = jvm.org.apache.spark.sql.execution.LogicalRDD(
-                an.output(),
-                an.rdd(),
-                an.outputPartitioning(),
-                an.outputOrdering(),
-                an.isStreaming(),
-                an.stream(),
-                ck.sparkSession._jsparkSession,
-                none,  # originStats: the whole point — flat
-                none,  # originConstraints
-            )
-            new_jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                ck.sparkSession._jsparkSession, new_plan
-            )
-        else:  # unexpected plan shape: keep the r9 stats-only reset
-            jdf = ck._jdf
-            new_jdf = ck.sparkSession._jsparkSession.internalCreateDataFrame(
-                jdf.queryExecution().toRdd(), jdf.schema(), False
-            )
-        return _PyDF(new_jdf, ck.sparkSession)
-    except Exception:
-        return ck
+    ck = _truncate_lineage(df, eager)
+    spark = ck.sparkSession
+    jvm = spark._jvm
+    an = ck._jdf.queryExecution().analyzed()
+    none = jvm.scala.Option.apply(None)
+    new_plan = jvm.org.apache.spark.sql.execution.LogicalRDD(
+        an.output(),
+        an.rdd(),
+        an.outputPartitioning(),
+        an.outputOrdering(),
+        an.isStreaming(),
+        an.stream(),
+        spark._jsparkSession,
+        none,  # originStats: the whole point — flat
+        none,  # originConstraints
+    )
+    new_jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, new_plan
+    )
+    return _PyDF(new_jdf, spark)
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

@@ -30,6 +30,7 @@ from pyspark.errors import AnalysisException
 
 from etl_capnz_spark.operators.features import build_features
 from etl_capnz_spark.operators.rank import bounded_const_key as _bounded_key
+from etl_capnz_spark.session import STREAM_MAX_FILES_PER_TRIGGER
 from etl_capnz_spark.sources.xml import parse_cap_xml
 from etl_capnz_spark.streaming import commitlog as _cl
 
@@ -86,7 +87,10 @@ def read_xml_stream(
 ) -> DataFrame:
     reader = (
         spark.readStream.format("text")
-        .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
+        .option(
+            "maxFilesPerTrigger",
+            max_files_per_trigger or STREAM_MAX_FILES_PER_TRIGGER,
+        )
     )
     return reader.load(snapshot_dir).withColumnRenamed("value", "xml")
 

@@ -5,14 +5,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_capnz_spark.session import get_session  # noqa: E402
+from etl_capnz_spark.session import default_cpus, get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cpus = default_cpus()
     s = get_session("tests", master=f"local[{cpus}]", shuffle_partitions=cpus)
     yield s
     s.stop()

@@ -11,6 +11,9 @@ outputs on every seamed operator.
 
 import glob
 
+import pytest
+from py4j.protocol import Py4JError
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -126,3 +129,63 @@ def test_walk_impl_modes_identical(spark, monkeypatch):
     assert spark.conf.get(
         "spark.sql.requireAllClusterKeysForCoPartition"
     ) == "true"
+
+
+def _origin_stats(df):
+    """The ``originStats`` a checkpoint's ``LogicalRDD`` carries (second
+    constructor parameter list: session, originStats, originConstraints)."""
+    plan = df._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    return plan.otherCopyArgs().apply(1)
+
+
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+@pytest.mark.parametrize("eager", [True, False])
+def test_flat_checkpoint_carries_no_origin_stats(
+    spark, monkeypatch, tmp_path, mode, eager
+):
+    from etl_capnz_spark.session import engine_checkpoint, flat_local_checkpoint
+
+    df = spark.range(1000).selectExpr("id", "id % 7 AS k").repartition(4, "k")
+    flat = _in_mode(
+        monkeypatch, tmp_path, mode, lambda: flat_local_checkpoint(df, eager)
+    )
+    assert not _origin_stats(flat).isDefined()
+    default = int(spark.conf.get("spark.sql.defaultSizeInBytes").rstrip("b"))
+    assert flat._jdf.queryExecution().analyzed().stats().sizeInBytes() == default
+    assert _rows(flat) == _rows(df)
+    # the plain checkpoint is what inherits them
+    plain = _in_mode(
+        monkeypatch, tmp_path, mode, lambda: engine_checkpoint(df, eager)
+    )
+    assert _origin_stats(plain).isDefined()
+
+
+class _JvmWithoutLogicalRDD:
+    """A JVM view on which ``LogicalRDD`` cannot be found, as after a Spark
+    upgrade that moved or renamed it; everything else resolves as usual."""
+
+    def __init__(self, real, path=""):
+        self._real, self._path = real, path
+
+    def __getattr__(self, name):
+        path = f"{self._path}.{name}".lstrip(".")
+        if path == "org.apache.spark.sql.execution.LogicalRDD":
+            raise Py4JError(f"{path} does not exist in the JVM")
+        return _JvmWithoutLogicalRDD(getattr(self._real, name), path)
+
+    def __call__(self, *args):
+        return self._real(*args)
+
+
+def test_flat_checkpoint_refuses_to_return_inherited_stats(spark, monkeypatch):
+    """Without the internal constructor there is no flat plan to build;
+    handing back the plain checkpoint instead would silently bring back
+    the compounding size estimates the helper exists to prevent."""
+    from etl_capnz_spark.session import flat_local_checkpoint
+
+    df = spark.range(100).selectExpr("id", "id % 7 AS k")
+    monkeypatch.setattr(spark, "_jvm", _JvmWithoutLogicalRDD(spark._jvm))
+    with pytest.raises(Py4JError):
+        out = flat_local_checkpoint(df)
+        assert not _origin_stats(out).isDefined()

@@ -46,6 +46,38 @@ def test_stream_features_dedups_relanded_snapshots(spark, tmp_path):
     assert ids == ["A-1", "A-1-center"]  # duplicates suppressed
 
 
+def test_stream_micro_batch_of_many_files_runs_no_listing_job(spark, tmp_path):
+    """A micro-batch re-lists its new files by explicit path; past
+    ``parallelPartitionDiscovery.threshold`` (Spark's default: 32 paths)
+    that listing is a Spark job of one task per file — ~0.4 s of fixed
+    cost per batch under ``local[n]``. Local sessions list on the driver."""
+    snap = tmp_path / "snaps"
+    snap.mkdir()
+    for i in range(40):
+        doc = CAP_XML.replace("A-1", f"L-{i}").replace("\n", " ")
+        (snap / f"a{i:02d}.xml").write_text(doc)
+    q = (
+        read_xml_stream(spark, str(snap))
+        .writeStream.format("memory")
+        .queryName("listing_out")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.sql("SELECT * FROM listing_out").count() == 40
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descriptions = [store.job(j).description() for j in jobs]
+    listing = [
+        d.get() for d in descriptions
+        if d.isDefined() and d.get().startswith("Listing leaf files")
+    ]
+    assert jobs and listing == []
+
+
 def test_windowed_aggregations_streaming(spark, sf_dir, tmp_path):
     events = read_table(spark, sf_dir, "events")
     events.write.mode("overwrite").parquet(str(tmp_path / "events_in"))
